@@ -45,14 +45,38 @@ def test_rollup_single_exchange(spark, turns_small):
     """attach_group_stats windows + the groupBy must share ONE hash
     exchange on the rollup keys (the single-shuffle design claim in
     functions/features.py)."""
-    long_df = to_long_panel(turns_small).where(F.col("kind") == "text_len")
+    long_df = to_long_panel(turns_small, channels=("text_len",))
     df, keys = bucketize(long_df, "hour")
     stats = FT.attach_group_stats(df, keys)
     agg = stats.groupBy(*keys).agg(*[c.alias(n) for n, c in FT.core_aggs().items()])
     plan = _plan(agg)
-    # exchanges other than the AQE-inserted read side of the input joins:
     n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges <= 2, f"expected <=2 hash exchanges (latency join + rollup keys), got {n_exchanges}:\n{plan[:2000]}"
+    assert n_exchanges <= 1, f"expected <=1 hash exchange (rollup keys), got {n_exchanges}:\n{plan[:2000]}"
+
+
+def _executed_joins(spark, name: str) -> list[str]:
+    """Join operators in a declared query's final (post-AQE) plan."""
+    import re
+
+    from __spark_entry__ import queries
+
+    df = queries()[name](spark, SF)
+    df.collect()  # execute THIS plan so AQE finalizes it
+    final = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    return re.findall(r"\w*(?:Join|CartesianProduct)\b.*", final)
+
+
+@pytest.mark.parametrize("name", ["gapfill_locf_hour", "conv_features_ext", "rollup_minute_core"])
+def test_no_latency_join_without_latency(spark, name):
+    """Queries that never read latency_s must not build the latency
+    self-join: the long panel is pruned to the channels they read."""
+    assert _executed_joins(spark, name) == []
+
+
+def test_late_merge_keeps_only_semi_and_anti_join(spark):
+    joins = _executed_joins(spark, "late_data_merge_hour")
+    assert len(joins) == 2, joins
+    assert any("LeftSemi" in j for j in joins) and any("LeftAnti" in j for j in joins), joins
 
 
 def test_mask_join_broadcasts(spark, turns_small):

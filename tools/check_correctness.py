@@ -3,7 +3,8 @@
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB at the given sf dir, then compares
 row count, sorted column-name schema, and an order-insensitive value
-hash. Usage:  python tools/check_correctness.py [sf_dir] [name ...]
+hash. The summary line also gives the run's generated-class compiles
+and JVM CPU seconds. Usage:  python tools/check_correctness.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
@@ -55,6 +56,17 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def jvm_counters(spark) -> tuple[int, float]:
+    """(generated classes compiled, JVM CPU seconds) so far.  A compile
+    count that grows on a warm engine means the codegen cache is too
+    small for the query set (session.py)."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    with open(f"/proc/{jvm.ProcessHandle.current().pid()}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()  # fields 3.. of proc(5)
+    return compiles, (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -66,6 +78,7 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, os_ = E.queries(), E.oracle_sql()
+    compiles0, cpu0 = jvm_counters(spark)
     failed = []
     n_run = 0
     for name, fn in qs.items():
@@ -94,7 +107,11 @@ def main():
             failed.append(name)
         else:
             print(f"PASS {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
-    print(f"\n{n_run - len(failed)}/{n_run} pass")
+    compiles, cpu = jvm_counters(spark)
+    print(
+        f"\n{n_run - len(failed)}/{n_run} pass"
+        f"  codegen_compiles={compiles - compiles0} jvm_cpu_s={cpu - cpu0:.1f}"
+    )
     sys.exit(1 if failed else 0)
 
 

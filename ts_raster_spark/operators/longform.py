@@ -136,8 +136,3 @@ def to_long_panel(
         stacked.where(F.col("value_out").isNotNull())
         .withColumnRenamed("value_out", "value")
     )
-
-
-def to_long_panel_window(turns, channels=CHANNELS):
-    """Window-lag latency variant for inputs without dense turn_idx."""
-    return to_long_panel(turns, channels, dense_turn_idx=False)

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from ts_raster_spark.operators.cascade import cascade_up
 from ts_raster_spark.operators.gapfill import gapfill
-from ts_raster_spark.operators.longform import to_long_panel
+from ts_raster_spark.operators.longform import CHANNELS, to_long_panel
 from ts_raster_spark.operators.mask import mask_df, unmask_df
 from ts_raster_spark.operators.rollup import rollup_features, rollup_simple
 from ts_raster_spark.sources.turns import derive_turns_from_events
@@ -33,12 +33,14 @@ def load_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def load_long(spark: SparkSession, sf_dir: str, channels=None) -> DataFrame:
-    """``channels`` prunes the panel derivation (skips the latency
-    self-join when latency_s is unused — see longform.with_channels);
-    None keeps the full default channel set."""
-    if channels is None:
-        return to_long_panel(load_turns(spark, sf_dir))
-    return to_long_panel(load_turns(spark, sf_dir), channels=channels)
+    """The long panel carrying only ``channels`` (None: every channel).
+
+    Queries pass the kinds they read instead of filtering on ``kind``
+    afterwards: a filter cannot push through ``stack``, so only the
+    channel list prunes the derivation — it skips the latency self-join
+    when latency_s is not read (see longform.with_channels) and leaves
+    fewer operators to compile."""
+    return to_long_panel(load_turns(spark, sf_dir), channels=channels or CHANNELS)
 
 
 def finalize(df: DataFrame, ts_fmt: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
@@ -82,10 +84,8 @@ def q_long_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FULL_FEATURES = None  # all of default_feature_aggs
 
 
-def _rollup(spark, sf_dir, tier, kinds=None, strikes=False, trend=False, entropy=False):
-    long_df = load_long(spark, sf_dir)
-    if kinds:
-        long_df = long_df.where(F.col("kind").isin(*kinds))
+def _rollup(spark, sf_dir, tier, kinds, strikes=False, trend=False, entropy=False):
+    long_df = load_long(spark, sf_dir, channels=tuple(kinds))
     return finalize(
         rollup_features(
             long_df, tier=tier, include_strikes=strikes,
@@ -157,7 +157,7 @@ def _mask(spark, sf_dir):
 
 def q_mask_rollup_hour(spark, sf_dir):
     """mask_df analog: left-semi filter then rollup (calculate.py:90-91)."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     masked = mask_df(long_df, _mask(spark, sf_dir))
     out = rollup_features(masked, tier="hour", feature_names=["turn_count", "mean", "maximum", "minimum"])
     return finalize(out)
@@ -177,7 +177,7 @@ def q_panel_lag1(spark, sf_dir):
     """panel_lag_1 analog (prep.py:705-743): per-(conv,kind) lag-1."""
     from pyspark.sql.window import Window
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "value"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "value"))
     w = Window.partitionBy("conv_id", "kind").orderBy("turn_idx", "ts")
     out = long_df.withColumn("value_lag1", F.lag("value", 1).over(w)).where(
         F.col("value_lag1").isNotNull()
@@ -191,13 +191,13 @@ def q_cascade_hour_from_minute(spark, sf_dir):
     """Tier algebra: hour tier via minute-tier sufficient statistics.
     Oracle computes the hour tier directly from raw — equality IS the
     tier-algebra proof."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     minute = rollup_simple(long_df, "minute")
     return finalize(cascade_up(minute, "hour"))
 
 
 def q_cascade_day_from_minute(spark, sf_dir):
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "latency_s"))
     minute = rollup_simple(long_df, "minute")
     return finalize(cascade_up(cascade_up(minute, "hour"), "day"))
 
@@ -205,7 +205,7 @@ def q_cascade_day_from_minute(spark, sf_dir):
 # --- gap-fill --------------------------------------------------------------
 
 def _hour_points(spark, sf_dir):
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     return rollup_simple(
         long_df, "hour", aggs={"value": F.avg("value")}
     )
@@ -638,7 +638,7 @@ def q_asof_join(spark, sf_dir):
 
     t = load_turns(spark, sf_dir).select("conv_id", "turn_idx", "ts")
     pts = rollup_simple(
-        load_long(spark, sf_dir).where(F.col("kind") == "text_len"),
+        load_long(spark, sf_dir, channels=("text_len",)),
         "hour",
         aggs={"bucket_mean": F.avg("value")},
     ).select("conv_id", "bucket_start", r4(F.col("bucket_mean")).alias("bucket_mean"))
@@ -652,7 +652,7 @@ def q_time_weighted_avg(spark, sf_dir):
     """Time-weighted hourly average of text_len (irregular sampling)."""
     from ts_raster_spark.operators.asof import time_weighted_avg_hour
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     return finalize(time_weighted_avg_hour(long_df))
 
 
@@ -669,7 +669,7 @@ def q_export_wide_features(spark, sf_dir):
     314-332): the banded export layout — one row per conv_id, one column
     per (kind × feature), deterministic column order, sentinel-filled
     where a channel is absent (e.g. single-turn convs have no latency)."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "latency_s"))
     wide = long_df.groupBy("conv_id").pivot("kind", ["text_len", "latency_s"]).agg(
         F.count("value").alias("n"),
         F.avg("value").alias("mean"),
@@ -746,9 +746,7 @@ def q_sketch_kll_hour(spark, sf_dir):
     from ts_raster_spark.operators.kll import kll_merge, kll_quantiles, kll_sketch
 
     k = 64
-    long_df = load_long(spark, sf_dir, channels=("text_len",)).where(
-        F.col("kind") == "text_len"
-    )
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     sk = kll_merge(kll_sketch(long_df, "minute", k=k), "hour", k=k)
     est = kll_quantiles(sk, qs=(0.5, 0.95))
     raw = long_df.withColumn("bucket_start", F.date_trunc("hour", F.col("ts")))
@@ -830,9 +828,7 @@ def q_sketch_kll_day(spark, sf_dir):
     from ts_raster_spark.operators.kll import kll_merge, kll_quantiles, kll_sketch
 
     k = 64
-    long_df = load_long(spark, sf_dir, channels=("text_len",)).where(
-        F.col("kind") == "text_len"
-    )
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     sk = kll_merge(kll_merge(kll_sketch(long_df, "minute", k=k), "hour", k=k), "day", k=k)
     est = kll_quantiles(sk, qs=(0.5, 0.95))
     raw = long_df.withColumn("bucket_start", F.date_trunc("day", F.col("ts")))
@@ -1041,7 +1037,7 @@ def q_sketch_quantile_hour(spark, sf_dir):
         value_range,
     )
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "latency_s"))
     rng = value_range(long_df)
     minute = histogram_sketch(long_df, "minute", rng, bins=64)
     hour = merge_sketch(minute, "hour")
@@ -1085,7 +1081,7 @@ def q_retention_ttl_hour(spark, sf_dir):
     than 7 days before the panel's own horizon (max bucket_start) are
     dropped. The cutoff is a deterministic function of the data, never
     of wall clock — the operators/retention.apply_retention contract."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     hour = rollup_simple(long_df, "hour")
     horizon = hour.agg(F.max("bucket_start").alias("_horizon"))
     kept = (
@@ -1110,14 +1106,13 @@ def q_late_data_merge_hour(spark, sf_dir):
     ontime = turns.where(~is_late)
     late = turns.where(is_late)
 
-    tier_ontime = rollup_simple(
-        to_long_panel(ontime).where(F.col("kind") == "text_len"), "hour"
-    )
+    tier_ontime = rollup_simple(to_long_panel(ontime, channels=("text_len",)), "hour")
     affected = late.select("conv_id").distinct()
     recomputed = rollup_simple(
         to_long_panel(
-            turns.join(F.broadcast(affected), "conv_id", "left_semi")
-        ).where(F.col("kind") == "text_len"),
+            turns.join(F.broadcast(affected), "conv_id", "left_semi"),
+            channels=("text_len",),
+        ),
         "hour",
     )
     kept = tier_ontime.join(F.broadcast(affected), "conv_id", "left_anti")
@@ -1139,7 +1134,7 @@ def q_autocorr_lags(spark, sf_dir):
     from ts_raster_spark.functions.features import attach_group_stats, autocorrelation_agg
 
     keys = ["conv_id", "kind"]
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     st = attach_group_stats(long_df, keys, lags=(1, 2, 3))
     aggs = {}
     for lag in (1, 2, 3):
@@ -1162,7 +1157,7 @@ def q_kernel_features_cwt(spark, sf_dir):
     driver check: CWT has no SQL analog)."""
     from ts_raster_spark.operators.kernels import extract_features_kernel
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     out = extract_features_kernel(long_df, tier=None)
     keep = ["conv_id", "kind", "turn_count", "mean", "abs_energy",
             "number_cwt_peaks_n6", "number_cwt_peaks_n12",
@@ -1181,7 +1176,7 @@ def q_compress_roundtrip(spark, sf_dir):
     proven (tests/test_compression.py, test_chimp.py)."""
     from ts_raster_spark.operators.compress import compress_blocks, decompress_blocks
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "latency_s"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "latency_s"))
     blocks = compress_blocks(long_df, block="day")
     # sums carry the surface-standard r4 contract (4-dp + sig-digit cap,
     # functions/norm.py — round 5 tightened from an ad-hoc 2-dp round);
@@ -1209,7 +1204,7 @@ def q_compress_roundtrip(spark, sf_dir):
 def q_moving_stats(spark, sf_dir):
     """Rolling per-conversation stats over the trailing 5 turns
     (frame-spec window breadth: ROWS BETWEEN 4 PRECEDING AND CURRENT)."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx", "ts")
@@ -1230,7 +1225,7 @@ def q_moving_stats_time(spark, sf_dir):
     window (RANGE frame on integer epoch-microseconds — value-based, so
     tie order is irrelevant and both engines agree exactly). The
     time-interval twin of the row-frame moving_stats."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     epoch_us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     w = (
         Window.partitionBy("conv_id")
@@ -1308,7 +1303,7 @@ def q_moving_quantiles(spark, sf_dir):
     """Rolling exact quantiles over the trailing 5 turns (moving median
     and p95) — holistic aggregates as frame-spec window functions, kept
     JVM-side (percentile is a Catalyst window aggregate, no Python)."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind") == "text_len")
+    long_df = load_long(spark, sf_dir, channels=("text_len",))
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx", "ts")
@@ -1340,7 +1335,7 @@ def q_stratified_sample(spark, sf_dir):
 def q_balanced_panel_check(spark, sf_dir):
     """prep.py:721-724 analog: per-(conv, kind) bucket-count balance
     check against the panel-wide maximum."""
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "is_tool"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "is_tool"))
     counts = (
         long_df.withColumn("bucket_start", F.date_trunc("day", F.col("ts")))
         .groupBy("conv_id", "kind")
@@ -1366,7 +1361,7 @@ def q_conv_features_ext(spark, sf_dir):
     (conv_id, kind)."""
     from ts_raster_spark.functions.features_ext import rollup_ext_features
 
-    long_df = load_long(spark, sf_dir).where(F.col("kind").isin("text_len", "value"))
+    long_df = load_long(spark, sf_dir, channels=("text_len", "value"))
     return finalize(rollup_ext_features(long_df, ["conv_id", "kind"]))
 
 

@@ -57,6 +57,21 @@ def get_spark(
         # 119 MB snappy vs 84 MB zstd, 4.8 s vs 4.6 s write, read flat)
         # — guide §6; at 100 TB smaller files are strictly better.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Generated-class cache.  The default 100 entries is a Guava
+        # cache split into 4 segments of ~25 entries each, evicted per
+        # segment, so the declared queries evict each other's classes
+        # and every run Janino-compiles and re-JITs the same source
+        # (~194 classes per pass of the 5-query bench mix).  Measured
+        # working set of all 108 queries at sf0.001: 1,768 distinct
+        # classes (1,428 with the setting below); 4096 is ~2.3x that.
+        # Static conf: it only takes effect in a JVM whose first
+        # session is this one.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The cache is keyed by source text, and a whole-stage class is
+        # named after its codegen stage id, which AQE assigns in stage
+        # completion order.  With the id in the name the same stage
+        # compiles again whenever that order changes between runs.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
