@@ -60,23 +60,24 @@ def attach_group_stats(df: DataFrame, keys: list[str], order_cols=ORDER_COLS, la
     # round 6; the previous unordered spec forced a second full sort
     # (sort by keys, then sort by keys+order) on the hot rollup path.
     wf = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    out = (
-        df.withColumn(MU, F.avg(V).over(wf))
-        .withColumn(SIG, F.stddev_pop(V).over(wf))
-        .withColumn(VMAX, F.max(V).over(wf))
-        .withColumn(VMIN, F.min(V).over(wf))
-        .withColumn("_nrows", F.count(V).over(wf))
-        .withColumn(RN, F.row_number().over(wo))
-    )
+    # One withColumns, not a withColumn chain: every withColumn call
+    # re-analyzes the whole plan below it.
+    cols = {
+        MU: F.avg(V).over(wf),
+        SIG: F.stddev_pop(V).over(wf),
+        VMAX: F.max(V).over(wf),
+        VMIN: F.min(V).over(wf),
+        "_nrows": F.count(V).over(wf),
+        RN: F.row_number().over(wo),
+    }
     for lag in sorted(set(lags) | {1, 2}):
-        out = out.withColumn(f"_lag{lag}", F.lag(V, lag).over(wo))
+        cols[f"_lag{lag}"] = F.lag(V, lag).over(wo)
     # neighbourhood maxima for number_peaks(n): strict peak needs x >
     # every neighbour within distance n on BOTH sides (interior only)
     for n in PEAK_NS:
-        out = out.withColumn(
-            f"_maxp{n}", F.max(V).over(wo.rowsBetween(-n, -1))
-        ).withColumn(f"_maxf{n}", F.max(V).over(wo.rowsBetween(1, n)))
-    return out
+        cols[f"_maxp{n}"] = F.max(V).over(wo.rowsBetween(-n, -1))
+        cols[f"_maxf{n}"] = F.max(V).over(wo.rowsBetween(1, n))
+    return df.withColumns(cols)
 
 
 def peaks_aggs(ns=PEAK_NS) -> dict[str, Column]:
@@ -108,10 +109,11 @@ def attach_value_rank(df: DataFrame, keys: list[str], v: str = V) -> DataFrame:
     skips nulls, so a null row shares its predecessor's rank and its
     null value contributes nothing to the conditional sums."""
     w_v = Window.partitionBy(*keys).orderBy(F.col(v).asc())
-    return df.withColumn(
-        RNV, F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ).withColumn(
-        NV, F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    return df.withColumns(
+        {
+            RNV: F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+            NV: F.count(v).over(w_v.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+        }
     )
 
 

@@ -97,21 +97,29 @@ def attach_ext_stats(df: DataFrame, keys: list[str], order_cols=ORDER_COLS) -> D
     # (bit-identical to the previous percentile(array(...)) window,
     # which as a TypedImperativeAggregate buffered a per-group value
     # map and forced its own pass).
-    out = (
-        df.withColumn(CUMABS, F.sum(F.abs(F.col(V))).over(wo.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn(TOTABS, F.sum(F.abs(F.col(V))).over(wof))
-        # first-occurrence flag: lets every DISTINCT-flavored feature be
-        # a plain sum (sum(_vrn = 1) == count(DISTINCT value)), keeping
-        # Spark off the expand/gid distinct-aggregate rewrite (which
-        # costs an extra exchange and a 3x row expand)
-        .withColumn(VRN, F.row_number().over(wval_o))
-        .withColumn(VCNT, F.count("*").over(wval))
+    # One withColumns per dependency level, not one withColumn per
+    # column: each call re-analyzes the plan below it.  The sorts stay
+    # grouped as above (conv_features_ext's executed plan has the same
+    # six).
+    out = df.withColumns(
+        {
+            CUMABS: F.sum(F.abs(F.col(V))).over(wo.rowsBetween(Window.unboundedPreceding, 0)),
+            TOTABS: F.sum(F.abs(F.col(V))).over(wof),
+            # first-occurrence flag: lets every DISTINCT-flavored feature be
+            # a plain sum (sum(_vrn = 1) == count(DISTINCT value)), keeping
+            # Spark off the expand/gid distinct-aggregate rewrite (which
+            # costs an extra exchange and a 3x row expand)
+            VRN: F.row_number().over(wval_o),
+            VCNT: F.count("*").over(wval),
+        }
     )
     out = attach_value_rank(out, keys)
-    return (
-        out.withColumn(QL, rank_quantile_window(CHANGE_QL, keys))
-        .withColumn(QH, rank_quantile_window(CHANGE_QH, keys))
-        .withColumn(RNABS, F.row_number().over(wabs))
+    return out.withColumns(
+        {
+            QL: rank_quantile_window(CHANGE_QL, keys),
+            QH: rank_quantile_window(CHANGE_QH, keys),
+            RNABS: F.row_number().over(wabs),
+        }
     )
 
 

@@ -72,6 +72,14 @@ def get_spark(
         # completion order.  With the id in the name the same stage
         # compiles again whenever that order changes between runs.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark's DataFrame debugging wraps every pyspark.sql.functions
+        # call in a Python stack walk plus ~5 extra py4j round trips
+        # (active-session lookup, conf read, JVM class lookup, origin
+        # set/clear), all to name the Python line in analysis errors.
+        # Building conv_features_ext took ~8,200 round trips with it on
+        # and ~2,400 with it off; the declared queries are fixed code, so
+        # the Spark-side error message alone locates a failure.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
