@@ -163,11 +163,11 @@ def test_media_features_match_source_pixels(spark):
 
 
 def test_connected_components_chain_and_singletons(spark):
-    """Min-label propagation converges on a chain (diameter > 1 forces
-    multiple rounds) and carries isolated nodes as singletons."""
+    """The component solver converges on a chain (diameter > 1) and
+    carries isolated nodes as singletons."""
     from pyspark.sql import functions as F
 
-    from ts_raster_spark.operators.dedup import connected_components
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 11)],
@@ -176,12 +176,12 @@ def test_connected_components_chain_and_singletons(spark):
     nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 20, 99]], "node long")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(edges, all_nodes=nodes).collect()
+        for r in connected_components_star(edges, all_nodes=nodes).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 10, 99: 99}
 
     # without all_nodes, only edge-touched nodes appear
-    got2 = connected_components(edges)
+    got2 = connected_components_star(edges)
     assert got2.count() == 7
     assert got2.where(F.col("node") == 99).count() == 0
 
@@ -201,12 +201,11 @@ def test_dedup_keep_canonical(spark):
     )
     from ts_raster_spark.operators.dedup import dedup_keep_canonical
 
-    for deep in (False, True):
-        out = dedup_keep_canonical(docs, deep=deep).toPandas().set_index("doc_id")
-        assert "doc-a" in out.index and "doc-d" in out.index
-        assert "doc-b" not in out.index  # exact near-dup collapsed
-        assert int(out["n_dups"].sum()) == 4
-        assert int(out.loc["doc-d", "n_dups"]) == 1
+    out = dedup_keep_canonical(docs).toPandas().set_index("doc_id")
+    assert "doc-a" in out.index and "doc-d" in out.index
+    assert "doc-b" not in out.index  # exact near-dup collapsed
+    assert int(out["n_dups"].sum()) == 4
+    assert int(out.loc["doc-d", "n_dups"]) == 1
 
 
 def _union_find(n_nodes, edges):
@@ -231,22 +230,20 @@ def _union_find(n_nodes, edges):
 
 
 def test_components_star_deep_path_graph(spark):
-    """large-star/small-star must converge in O(log n) rounds on a
-    path graph whose diameter (200) is far beyond the min-label
-    default max_iter=25 — the case where min-label must REFUSE."""
+    """large-star/small-star converges in O(log n) rounds on a path
+    graph of diameter 200, and refuses to return a labelling when
+    ``max_rounds`` is too small to reach the fixpoint."""
     import pytest as _pt
 
-    from ts_raster_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     n = 201
     path_edges = [(i, i + 1) for i in range(n - 1)]
     edges = spark.createDataFrame(path_edges, "doc_a long, doc_b long")
 
+    # this path reaches the fixpoint in round 9; 3 rounds must refuse
     with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=25)
+        connected_components_star(edges, max_rounds=3)
 
     got = {
         r["node"]: r["component"]
@@ -256,15 +253,12 @@ def test_components_star_deep_path_graph(spark):
     assert got == want  # everything collapses to component 0
 
 
-def test_components_star_matches_min_label_random(spark):
-    """On shallow random graphs both algorithms agree with union-find
-    (and with each other), including isolated singletons."""
+def test_components_star_matches_union_find_random(spark):
+    """On shallow random graphs the solver agrees with union-find,
+    including isolated singletons."""
     import random
 
-    from ts_raster_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from ts_raster_spark.operators.dedup import connected_components_star
 
     rng = random.Random(7)
     n = 120
@@ -274,16 +268,11 @@ def test_components_star_matches_min_label_random(spark):
     edges = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     want = _union_find(n, edge_list)
-    got_star = {
+    got = {
         r["node"]: r["component"]
         for r in connected_components_star(edges, all_nodes=nodes).collect()
     }
-    got_min = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, all_nodes=nodes).collect()
-    }
-    assert got_star == want
-    assert got_min == want
+    assert got == want
 
 
 def test_video_decode_env_gate(monkeypatch):

@@ -13,7 +13,7 @@ KINDS = ("text_len", "is_tool")
 
 
 def _minute(turns):
-    return rollup_simple(to_long_panel(turns).where(F.col("kind").isin(*KINDS)), "minute")
+    return rollup_simple(to_long_panel(turns, channels=KINDS), "minute")
 
 
 def test_late_merge_equals_full_recompute(spark, turns_small, tmp_path):

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ts_raster_spark.operators.cascade import cascade_up
 from ts_raster_spark.operators.compress import compress_blocks
 from ts_raster_spark.operators.gapfill import gapfill
-from ts_raster_spark.operators.longform import to_long_panel
+from ts_raster_spark.operators.longform import CHANNELS, to_long_panel
 from ts_raster_spark.operators.mask import mask_df
 from ts_raster_spark.operators.rollup import rollup_simple, rollup_simple_wide
 from ts_raster_spark.plans.checkpoint import run_checkpointed
@@ -91,9 +91,7 @@ def run_rollup_job(
         counts["minute_filled"] = cat.row_count("rollup_minute_filled")
 
     if cfg.compress:
-        long_df = to_long_panel(turns)
-        if cfg.kinds:
-            long_df = long_df.where(long_df.kind.isin(*cfg.kinds))
+        long_df = to_long_panel(turns, channels=cfg.kinds or CHANNELS)
         blocks = compress_blocks(long_df, block="day")
         cat.write(blocks.withColumnRenamed("block_start", "bucket_start"), "raw_blocks")
         counts["raw_blocks"] = cat.row_count("raw_blocks")

@@ -138,71 +138,6 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 8, band_size: int = 2) -> DataFr
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    all_nodes: DataFrame | None = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over near-dup pair edges: min-label
-    propagation to a fixpoint — the cluster step that turns pairwise
-    dedup output into canonical groups (component id = min doc_id in the
-    group; a pipeline keeps one doc per component).
-
-    Iterative Spark shape: each round joins current labels to the
-    undirected edge list, takes the per-node min over self+neighbors,
-    and stops when no label changed. Rounds needed = graph diameter
-    (near-dup clusters are shallow — a handful); every round is one
-    shuffle on the node key and the plan is cut per round with
-    ``localCheckpoint`` so lineage cannot grow exponentially. Raises if
-    the diameter exceeds ``max_iter`` — non-converged labelings must
-    never be consumed as correct. For web-graph diameters use
-    :func:`connected_components_star` (O(log n) rounds).
-
-    ``all_nodes`` (one ``node`` column) adds isolated nodes as their own
-    singleton components. Output: (node, component).
-    """
-    und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    )
-    nodes = und.select(F.col("u").alias("node")).distinct()
-    if all_nodes is not None:
-        nodes = nodes.unionByName(all_nodes.select("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
-    converged = False
-    for _ in range(max_iter):
-        nb_min = (
-            und.join(labels, und["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("comp").alias("_nb_comp"))
-            .withColumnRenamed("u", "node")
-        )
-        # the convergence flag rides the checkpointed frame, so the probe
-        # below is a limit-1 scan of already-materialized partitions —
-        # not a second labels-vs-labels join job per round
-        new_labels = (
-            labels.join(nb_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("_nb_comp", F.col("comp"))).alias("comp"),
-                F.coalesce(F.col("_nb_comp") < F.col("comp"), F.lit(False)).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        converged = new_labels.where("_chg").isEmpty()
-        labels = new_labels.drop("_chg")
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} min-label "
-            f"rounds (component diameter exceeds max_iter); use "
-            f"connected_components_star for high-diameter graphs"
-        )
-    return labels.select(F.col("node"), F.col("comp").alias("component"))
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """Kiveris et al. large-star round: for each node u, connect every
     strictly-larger neighbor to min(Γ(u) ∪ {u}). Input/output: directed
@@ -238,27 +173,31 @@ def _small_star(e: DataFrame) -> DataFrame:
 def connected_components_star(
     edges: DataFrame,
     all_nodes: DataFrame | None = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_rounds: int = 50,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond" — the public web-graph algorithm). Converges in O(log n)
-    rounds regardless of component diameter, unlike min-label
-    propagation whose round count IS the diameter — this is the variant
-    for deep graphs (chains of pairwise near-dups, web link graphs).
+    """Connected components over near-dup pair edges ``(doc_a, doc_b)``
+    — the cluster step that turns pairwise dedup output into canonical
+    groups (component id = min doc_id in the group; a pipeline keeps one
+    doc per component).
+
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond" — the public
+    web-graph algorithm) converge in O(log n) rounds regardless of
+    component diameter (long near-dup chains, web link graphs); each
+    round is cut with ``localCheckpoint`` so lineage cannot grow.
 
     Convergence = the edge multiset is stable across a full
     (large, small) pair, detected with one count+hash aggregate per
-    round. At the fixpoint edges form stars child → component-min;
-    isolated ``all_nodes`` become singleton components. Output:
-    (node, component) — identical to :func:`connected_components`.
+    round. Raises if that takes more than ``max_rounds`` rounds —
+    non-converged labelings must never be consumed as correct. At the
+    fixpoint edges form stars child → component-min; isolated
+    ``all_nodes`` (one ``node`` column) become singleton components.
+    Output: (node, component).
     """
     e = (
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
+            F.greatest("doc_a", "doc_b").alias("u"),
+            F.least("doc_a", "doc_b").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -300,20 +239,17 @@ def dedup_keep_canonical(
     docs: DataFrame,
     k: int = 8,
     band_size: int = 2,
-    deep: bool = False,
 ) -> DataFrame:
     """The end-to-end near-dup dedup a training pipeline runs: MinHash-LSH
-    candidate pairs → connected components → keep exactly ONE document
-    (the component minimum) per near-dup cluster, plus every untouched
-    document. ``deep=True`` swaps in the large-star/small-star component
-    solver for graphs whose near-dup chains may be long.
+    candidate pairs → connected components (large-star/small-star) →
+    keep exactly ONE document (the component minimum) per near-dup
+    cluster, plus every untouched document.
 
     Output: the deduplicated corpus (all original columns) plus
     ``component`` and ``n_dups`` (cluster size the survivor represents).
     """
     pairs = minhash_lsh_pairs(docs, k=k, band_size=band_size)
-    solver = connected_components_star if deep else connected_components
-    comp = solver(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
+    comp = connected_components_star(pairs, all_nodes=docs.select(F.col("doc_id").alias("node")))
     sizes = comp.groupBy("component").agg(F.count("*").cast("long").alias("n_dups"))
     keep = (
         comp.where(F.col("node") == F.col("component"))

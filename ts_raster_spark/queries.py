@@ -261,12 +261,12 @@ def q_dedup_components(spark, sf_dir):
     """Near-dup clustering: connected components over the MinHash-LSH
     candidate pairs (pairs → canonical groups; component id = min
     doc_id). Oracle = recursive transitive-closure CTE."""
-    from ts_raster_spark.operators.dedup import connected_components, minhash_lsh_pairs
+    from ts_raster_spark.operators.dedup import connected_components_star, minhash_lsh_pairs
 
     docs = _docs(spark, sf_dir)
     pairs = minhash_lsh_pairs(docs, k=8, band_size=2)
     nodes = docs.select(F.col("doc_id").alias("node"))
-    out = connected_components(pairs, all_nodes=nodes)
+    out = connected_components_star(pairs, all_nodes=nodes)
     return out.select(F.col("node").alias("doc_id"), "component")
 
 
